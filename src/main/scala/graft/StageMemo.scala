@@ -18,8 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `localCheckpoint` and pins it ([[BlockHygiene]]) so Bench/Verify's
   * between-query block drop doesn't evict it. [[value]] memoizes an
   * arbitrary build artifact (e.g. the path of a written index store).
-  * Entries evict when the owning SparkContext ends, so short-lived test
-  * sessions don't accumulate.
+  * Entries and their build-ledger lines evict when the owning
+  * SparkContext ends, so short-lived test sessions don't accumulate.
   *
   * Builds run OUTSIDE the map update: stages nest (importedState builds on
   * patchedLog; the llm28d store build reads the memoized codebook), so a
@@ -60,6 +60,7 @@ object StageMemo {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
           cache.keys.filter(_._1 eq s).foreach(cache.remove)
+          buildLog.keys.filter(_._1 eq s).foreach(buildLog.remove)
           evictionHooked.remove(s): Unit
         }
       })
@@ -69,7 +70,7 @@ object StageMemo {
     * pinned on first use; returned from the memo afterwards.
     *
     * Pin AFTER winning the putIfAbsent (ADVICE r21): the loser of a build
-    * race is released through its RDD ([[RoundCheckpointer.release]] —
+    * race is released through its RDD ([[Fixpoint.release]] —
     * `Dataset.unpersist` only uncaches via the CacheManager, which never
     * held a localCheckpoint's blocks), and because the loser was never
     * pinned its blocks stay eligible for [[BlockHygiene.dropUnpinned]]
@@ -82,7 +83,7 @@ object StageMemo {
         val cp = logged(s, key)(build.localCheckpoint())
         cache.putIfAbsent((s, key), cp) match {
           case Some(winner) =>
-            RoundCheckpointer.release(cp) // lost the race: free the blocks
+            Fixpoint.release(cp) // lost the race: free the blocks
             winner.asInstanceOf[DataFrame]
           case None => BlockHygiene.pin(cp)
         }

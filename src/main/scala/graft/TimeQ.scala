@@ -3,7 +3,7 @@ package graft
   * noop-sink run per listed name. Pass a name N times for an N-sample
   * isolated re-time (BENCH_NOTES r11 variance protocol). Block hygiene
   * between runs, as in Bench — otherwise a repeated checkpoint-heavy
-  * query (graph4's per-round RoundCheckpointer) times its later samples
+  * query (graph4's per-round [[Fixpoint]] checkpoints) times its later samples
   * under the eviction pressure of its earlier ones. */
 object TimeQ {
   def main(args: Array[String]): Unit = {

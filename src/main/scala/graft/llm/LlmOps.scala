@@ -1,6 +1,7 @@
 package graft.llm
 
-import graft.{QueryModule, RoundCheckpointer, Tables}
+import graft.{Fixpoint, QueryModule, Tables}
+import graft.operators.PairExpansion
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -129,8 +130,8 @@ object LlmOps extends QueryModule {
     * trains on a hash-sample of the corpus, not all of it — the per-query
     * assignment pass is the only full-corpus pass. Each round is one
     * assign-and-average sweep over the training set with the previous
-    * round's centroids localCheckpoint'd (plan depth stays O(1), the
-    * RoundCheckpointer discipline); rounds is a TRAINING-time knob — the
+    * round's centroids checkpointed and the superseded round released
+    * ([[Fixpoint]]); rounds is a TRAINING-time knob — the
     * probe path never pays for it, it just serves tighter cells (AnnSweep
     * r15: 4 rounds lifted probe recall@20 at nprobe=8 from 0.68 to 0.79
     * mean with zero probe-time cost). k ≤ 0 (the default) auto-scales the
@@ -163,7 +164,8 @@ object LlmOps extends QueryModule {
     // [[ivfAssignCells]]/[[ivfAssignCellsCos]]; their OLD formulation
     // kept rn for a shared checkpoint, which blocked the rewrite.
     val w = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cent_id"))
-    (1 to rounds).foldLeft(seeds) { (cents, r) =>
+    Fixpoint.run(seeds, rounds, checkpointInit = false, eagerFinal = false,
+        None) { (cents, _) =>
       val means = e.crossJoin(broadcast(cents))
         .withColumn("sim", cosine(col("embedding"), col("cent")))
         .withColumn("rn", row_number().over(w))
@@ -184,11 +186,10 @@ object LlmOps extends QueryModule {
       // starved cell at its previous position, where a later round's
       // shifted assignments can still repopulate it; exactly k rows
       // survive every round by construction (PqSpec pins it).
-      val next = cents.join(means, Seq("cent_id"), "left")
+      Some(cents.join(means, Seq("cent_id"), "left")
         .select(col("cent_id"),
-          coalesce(col("cent_new"), col("cent")).as("cent"))
-      if (r == rounds) next else next.localCheckpoint()
-    }
+          coalesce(col("cent_new"), col("cent")).as("cent")))
+    }._1
   }
 
   // ---- product quantization (LLM-28) ------------------------------------
@@ -233,16 +234,15 @@ object LlmOps extends QueryModule {
       .withColumn("cent_id", row_number().over(seedW) - 1)
       .select(col("sub"), col("cent_id"), col("subvec").as("cent"))
     val subs = pqSubvectors(e, m, sd)
-    val rc = new RoundCheckpointer
-    var cb = seeds
     // each Lloyd round: assign every subvector to its nearest current
     // centroid, recompute the means. The codebook is m·k tiny rows, so a
     // checkpoint BETWEEN rounds (superseded round released) keeps the next
     // round's broadcast a leaf instead of re-deriving the whole lineage;
     // the final round stays lazy — callers checkpoint the returned
     // codebook themselves, so an eager pass here would be paid twice.
-    for (r <- 1 to rounds) {
-      cb = subs.join(broadcast(cb), "sub")
+    Fixpoint.run(seeds, rounds, checkpointInit = false, eagerFinal = false,
+        None) { (cb, _) =>
+      Some(subs.join(broadcast(cb), "sub")
         .withColumn("dist", l2sq(col("subvec"), col("cent")))
         .groupBy("vec_id", "sub")
         .agg(min(struct(col("dist"), col("cent_id"), col("subvec"))).as("best"))
@@ -252,10 +252,8 @@ object LlmOps extends QueryModule {
         .agg(avg(col("v").cast("decimal(28,12)")).as("mval"))
         .groupBy("sub", "cent_id")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("mval")))),
-          x => x.getField("mval").cast("float")).as("cent"))
-      if (r < rounds) cb = rc.step(cb)
-    }
-    cb
+          x => x.getField("mval").cast("float")).as("cent")))
+    }._1
   }
 
   /** Assign each vector its nearest IVF cell: one broadcast of the
@@ -935,46 +933,17 @@ object LlmOps extends QueryModule {
     val sh = docs.select(col("doc_id"), explode(shingles3(col("text"))).as("shingle"))
       .localCheckpoint()  // feeds sizes + the posting-list grouping
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    postingPairCounts(sh, dfCap, ordered = true)
+    // shingles3 emits DISTINCT shingles per doc, so rows per shingle ==
+    // document frequency: the PairExpansion df cap is the shingle df cap
+    PairExpansion.counts(sh, col("shingle"), col("doc_id"), asSet = false,
+        directed = false, dfCap = Some(dfCap))
+      .toDF("a_id", "b_id", "n_common")
       .join(sizes.select(col("doc_id").as("a_id"), col("n_sh").as("n_a")), "a_id")
       .join(sizes.select(col("doc_id").as("b_id"), col("n_sh").as("n_b")), "b_id")
       .withColumn("jaccard", col("n_common").cast("double") /
         (col("n_a") + col("n_b") - col("n_common")))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
-  }
-
-  /** Shared pair-enumeration core of the posting-list dedup family (llm2b
-    * Jaccard, llm2e containment): per-shingle posting lists are collected
-    * into arrays by ONE exchange of (shingle, doc_id) and candidate pairs
-    * expand LOCALLY from each array (two chained generators in the same
-    * stage) — replacing the former posting-table SELF-JOIN, which
-    * exchanged the identical rows twice and probed a per-shingle hash
-    * table just to rediscover list membership (r21; guide §2.4 "remove
-    * shuffles outright"). Fan-out, skew posture and OUTPUT are identical:
-    * a shingle of document frequency df still emits its df·(df−1)
-    * (directed) candidate rows inside the task that owns the shingle —
-    * the dfCap bounds per-shingle work exactly as before (and caps the
-    * collected array at dfCap elements), df=1 shingles are pruned before
-    * expansion (they emit no pairs either way), and map-side partial
-    * aggregation collapses candidates to one (a_id, b_id, n_common) row
-    * per pair before the only remaining exchange. shingles3 emits
-    * DISTINCT shingles per doc, so count(*) per shingle == document
-    * frequency. Returns a_id < b_id pairs when `ordered`, both directed
-    * orders otherwise. */
-  private def postingPairCounts(sh: DataFrame, dfCap: Int,
-                                ordered: Boolean): DataFrame = {
-    val posts = sh.groupBy("shingle")
-      .agg(count(lit(1)).as("df_docs"), collect_list("doc_id").as("ids"))
-      .filter(col("df_docs") <= dfCap && col("df_docs") >= 2)
-      .select("ids")
-    val cmp = if (ordered) col("a_id") < col("b_id")
-              else col("a_id") =!= col("b_id")
-    posts
-      .select(explode(col("ids")).as("a_id"), col("ids"))
-      .select(col("a_id"), explode(col("ids")).as("b_id"))
-      .filter(cmp)
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("n_common"))
   }
 
   /** Distributed connected components by iterative min-label propagation —
@@ -990,32 +959,32 @@ object LlmOps extends QueryModule {
     *
     * `edges` must be symmetric (both (a,b) and (b,a) present). Each round
     * checkpoints the new labels and releases the superseded round
-    * ([[RoundCheckpointer]]): lineage stays one round deep, block
-    * footprint stays one label-table copy, and the convergence `count()`
-    * (a scalar action — the standard iterative-algorithm driver loop, not
-    * a data collect) re-reads checkpointed blocks rather than recomputing
-    * the chain.
+    * ([[Fixpoint]]): lineage stays one round deep, block footprint stays
+    * one label-table copy, and the convergence `count()` (a scalar action
+    * — the standard iterative-algorithm driver loop, not a data collect)
+    * re-reads checkpointed blocks rather than recomputing the chain. A
+    * round carries (node, comp, next_comp) so that count can compare the
+    * two labels; the next round reads next_comp.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val rc = new RoundCheckpointer
-    var labels = rc.step(edges.select(col("src").as("node")).distinct()
-      .withColumn("comp", col("node")))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    val init = edges.select(col("src").as("node")).distinct()
+      .withColumn("comp", col("node")).withColumn("next_comp", col("node"))
+    val unchanged = Fixpoint.Check(1, (_, stepped) =>
+      stepped.filter(col("next_comp") =!= col("comp")).count() == 0)
+    def labels(stepped: DataFrame): DataFrame =
+      stepped.select(col("node"), col("next_comp").as("comp"))
+    labels(Fixpoint.run(init, maxIter, checkpointInit = true,
+        eagerFinal = true, Some(unchanged)) { (stepped, _) =>
+      val cur = labels(stepped)
       val nbrMin = edges
-        .join(labels.select(col("node").as("dst"), col("comp")), "dst")
+        .join(cur.select(col("node").as("dst"), col("comp")), "dst")
         .groupBy(col("src").as("node"))
         .agg(min("comp").as("nbr_comp"))
-      val stepped = rc.step(labels.join(nbrMin, Seq("node"), "left")
+      Some(cur.join(nbrMin, Seq("node"), "left")
         .select(col("node"), col("comp"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
             .as("next_comp")))
-      changed = stepped.filter(col("next_comp") =!= col("comp")).count()
-      labels = stepped.select(col("node"), col("next_comp").as("comp"))
-      iter += 1
-    }
-    labels
+    }._1)
   }
 
   /** 64-bit SimHash over unigram tokens (sign of per-bit weighted sums),
@@ -1386,9 +1355,11 @@ object LlmOps extends QueryModule {
         .localCheckpoint() // feeds sizes + the posting-list grouping
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
       // directed pairs via the shared posting-list expansion (see
-      // [[postingPairCounts]]) — one exchange instead of the former
+      // [[PairExpansion]]) — one exchange instead of the former
       // capped-posting self-join's two
-      postingPairCounts(sh, dfCap = 1000, ordered = false)
+      PairExpansion.counts(sh, col("shingle"), col("doc_id"), asSet = false,
+          directed = true, dfCap = Some(1000))
+        .toDF("a_id", "b_id", "n_common")
         .join(sizes.select(col("doc_id").as("a_id"), col("n_sh").as("n_a")),
           "a_id")
         .filter(col("n_a") >= 5)
@@ -2634,7 +2605,7 @@ object LlmOps extends QueryModule {
     // first-8-hex (llm45's cross-engine protocol) → exact DuckDB
     // hash-match.
     "llm51_winnowing" -> ((s, d) => {
-      // r22 (guide §2.4; the llm2b postingPairCounts pattern — VERDICT r21
+      // r22 (guide §2.4; the llm2b [[PairExpansion]] pattern — VERDICT r21
       // #6): fingerprints are DISTINCT per doc (array_distinct in
       // winnowFingerprints), so the former df-cap + fp self-join — which
       // checkpointed the fp stream and shuffled it three times (df agg +
@@ -2643,9 +2614,9 @@ object LlmOps extends QueryModule {
       // df ∈ [2, 1000] prune is identical (df=1 fps emit no pairs either
       // way). The checkpoint is gone too: the stream now has one consumer.
       val fps = winnowFingerprints(Tables.documents(s, d))
-      postingPairCounts(fps.select(col("doc_id"), col("fp").as("shingle")),
-          dfCap = 1000, ordered = true)
-        .select(col("a_id"), col("b_id"), col("n_common").as("n_shared"))
+      PairExpansion.counts(fps, col("fp"), col("doc_id"), asSet = false,
+          directed = false, dfCap = Some(1000))
+        .toDF("a_id", "b_id", "n_shared")
         .filter(col("n_shared") >= 2)
         .orderBy("a_id", "b_id")
     }),
@@ -3477,7 +3448,6 @@ object LlmOps extends QueryModule {
     */
   def bpeTrain(s: SparkSession, docs: DataFrame, rounds: Int): DataFrame = {
     import s.implicits._
-    val rc = new RoundCheckpointer
     // r21: the corpus state rides the NUL-delimited STRING representation
     // ([[bpeWrap]]) instead of a token array — the merge apply is then one
     // codegen'd literal replace() per row ([[applyMergeStr]]) instead of
@@ -3486,9 +3456,13 @@ object LlmOps extends QueryModule {
     // O(tokens²) allocation per document. doc_id no longer rides the
     // round state either: pair counting never reads it, so each round's
     // checkpoint carries exactly the corpus bytes.
-    var corpus = rc.step(docs.select(bpeWrap(col("text")).as("s")))
     val merges = Seq.newBuilder[(Int, String, Long, String, String)]
-    for (r <- 1 to rounds) {
+    // The final round's rewrite stays lazy and is never run — nothing
+    // downstream reads the merged tokens (saves a full map pass). A corpus
+    // with no adjacent pair left is the fixpoint: later rounds would
+    // find nothing either.
+    Fixpoint.run(docs.select(bpeWrap(col("text")).as("s")), rounds,
+        checkpointInit = true, eagerFinal = false, None) { (corpus, round) =>
       val top = corpus
         .select(bpeToks(col("s")).as("toks"))
         .select(explode(zip_with(
@@ -3498,15 +3472,10 @@ object LlmOps extends QueryModule {
         .groupBy("pair").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("pair"))
         .limit(1).collect()
-      if (top.nonEmpty) {
-        val Array(xs, ys) = top(0).getString(0).split(PairSep.charAt(0))
-        merges += ((r, xs + " " + ys, top(0).getLong(1), xs, ys))
-        // the final round's winner needs no corpus rewrite — nothing
-        // downstream reads the merged tokens (saves a full map pass)
-        if (r < rounds) {
-          corpus = rc.step(corpus.select(
-            applyMergeStr(col("s"), xs, ys).as("s")))
-        }
+      top.headOption.map { t =>
+        val Array(xs, ys) = t.getString(0).split(PairSep.charAt(0))
+        merges += ((round.index, xs + " " + ys, t.getLong(1), xs, ys))
+        corpus.select(applyMergeStr(col("s"), xs, ys).as("s"))
       }
     }
     merges.result().toDF("round", "merge", "n", "x", "y").orderBy("round")

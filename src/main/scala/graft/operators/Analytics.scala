@@ -464,25 +464,20 @@ object Analytics extends QueryModule {
     }),
 
     // AGG-20: market-basket co-purchase pairs — which parts ship together?
-    // r22 (guide §2.4; the llm2b postingPairCounts pattern): ONE exchange
-    // groups each order's DISTINCT part set into an array (collect_set
-    // dedups in the aggregate — the former separate distinct() exchange
-    // is gone) and the a<b pairs expand LOCALLY via two chained
-    // generators, replacing the former basket self-join that scanned and
+    // r22 (guide §2.4): [[PairExpansion]] over each order's DISTINCT part
+    // set — ONE exchange groups the baskets, the a<b pairs expand LOCALLY,
+    // replacing the former basket self-join that scanned and
     // dedup-shuffled lineitem TWICE just to rediscover basket membership.
     // Fan-out per order is still basket² (small and bounded — max 13
-    // here) and lands in the task owning the order, exactly as the
-    // self-join's; pair counts are map-side-combined before the only
-    // remaining exchange; top-20 = TakeOrderedAndProject. A pathological
-    // mega-basket at 100 TB caps its own array at basket size; a df-cap
-    // like llm2b's would drop it outright if policy allows.
+    // here) and lands in the task owning the order; pair counts are
+    // map-side-combined before the only remaining exchange; top-20 =
+    // TakeOrderedAndProject. A pathological mega-basket at 100 TB caps
+    // its own array at basket size; a df-cap like llm2b's would drop it
+    // outright if policy allows.
     "agg20_copurchase_pairs" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-        .select(explode(col("ps")).as("part_a"), col("ps"))
-        .select(col("part_a"), explode(col("ps")).as("part_b"))
-        .filter(col("part_a") < col("part_b"))
-        .groupBy("part_a", "part_b").agg(count(lit(1)).as("n_orders"))
+      PairExpansion.counts(Tables.lineitem(s, d), col("l_orderkey"),
+          col("l_partkey"), asSet = true, directed = false, dfCap = None)
+        .toDF("part_a", "part_b", "n_orders")
         .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
         .limit(20)),
 
@@ -682,13 +677,14 @@ object Analytics extends QueryModule {
     // matched name pairs merge into ENTITIES by transitive closure
     // (a~b, b~c ⇒ {a,b,c}), then each cluster elects its lexicographic-min
     // name as canonical — the survivorship step of every record-linkage
-    // pipeline. Closure = 6 synchronous hash-to-min rounds over the pair
-    // graph (the llm12 connected-components algebra on string labels):
-    // per round ONE neighbor⋈label join + a min agg, RoundCheckpointer-
-    // bounded. 6 rounds cover diameter-6 name chains and BOTH engines
-    // unroll the same recursion, so the result is exact regardless of
-    // convergence. The name dictionary is DISTINCT names (sublinear in
-    // facts — the er1 discipline); the pair graph is smaller still.
+    // pipeline. Closure = at most 6 synchronous hash-to-min rounds over
+    // the pair graph: the llm12 [[LlmOps.connectedComponents]] loop on
+    // string labels, capped at 6 rounds. 6 rounds cover diameter-6 name
+    // chains and BOTH engines unroll the same recursion, so the result is
+    // exact regardless of convergence (stopping at a fixpoint gives the
+    // labels the remaining rounds would). The name dictionary is DISTINCT
+    // names (sublinear in facts — the er1 discipline); the pair graph is
+    // smaller still.
     "er2_entity_clusters" -> ((s, d) => {
       val names = Tables.part(s, d)
         .groupBy(col("p_name").as("name"))
@@ -702,24 +698,14 @@ object Analytics extends QueryModule {
         .withColumn("dist", levenshtein(col("name_a"), col("name_b"), 3))
         .filter(col("dist").between(1, 3))
         .select("name_a", "name_b")
-      val nb = pairs.select(col("name_a").as("v"), col("name_b").as("u"))
+      val nb = pairs.select(col("name_a").as("src"), col("name_b").as("dst"))
         .unionByName(
-          pairs.select(col("name_b").as("v"), col("name_a").as("u")))
+          pairs.select(col("name_b").as("src"), col("name_a").as("dst")))
         .localCheckpoint() // scanned every round
-      val rc = new graft.RoundCheckpointer
-      var lbl = nb.select("v").distinct().withColumn("lbl", col("v"))
-      for (_ <- 1 to 6) {
-        val next = nb
-          .join(lbl.withColumnRenamed("v", "u")
-            .withColumnRenamed("lbl", "ulbl"), Seq("u"))
-          .select(col("v"), col("ulbl").as("cand"))
-          .unionByName(lbl.select(col("v"), col("lbl").as("cand")))
-          .groupBy("v").agg(min("cand").as("lbl"))
-        lbl = rc.step(next)
-      }
+      val lbl = graft.llm.LlmOps.connectedComponents(nb, maxIter = 6)
       val clusters = lbl.join(names.select("name", "n_parts"),
-          col("v") === col("name"))
-        .groupBy(col("lbl").as("canonical"))
+          col("node") === col("name"))
+        .groupBy(col("comp").as("canonical"))
         .agg(count(lit(1)).as("n_members"),
           sum("n_parts").as("n_parts_total"))
       clusters

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryModule, RoundCheckpointer, Tables}
+import graft.{Fixpoint, QueryModule, Tables}
 
 /** GRAPH-1 — weighted PageRank, expressed relationally (SURVEY.md §2.19).
   *
@@ -44,7 +44,7 @@ object GraphOps extends QueryModule {
     * where D is the total dangling mass of the previous round.
     *
     * Each round is checkpointed eagerly and the superseded round released
-    * ([[RoundCheckpointer]]): the dangling-mass term references the
+    * ([[Fixpoint]]): the dangling-mass term references the
     * previous round's rank vector a SECOND time (contribs + dmass), so a
     * lazy iteration tree doubles per round — 2^iters subtree copies, each
     * re-executed (the round-9 regression). Eager per-round materialization
@@ -105,13 +105,24 @@ object GraphOps extends QueryModule {
     // dropped and the join shuffles on src/v — the only scale-correct plan
     // when the vertex table itself is cluster-sized.
     val bcastRanks = n <= broadcastCap
-    val rc = new RoundCheckpointer
-    var pr = verts.withColumn("pr", lit(1.0 / n))
-    var prev = pr
-    var i = 0
-    var converged = false
-    while (i < iters && !converged) {
-      i += 1
+    // Σ|Δpr| against the round checkEvery rounds back, every checkEvery
+    // rounds (the Fixpoint baseline outlives the rounds between checks)
+    val check = if (tol > 0) Some(Fixpoint.Check(checkEvery, (prev, pr) =>
+      pr.join(prev.withColumnRenamed("pr", "pr_prev"), "v")
+        .agg(sum(abs(col("pr") - col("pr_prev")).cast("decimal(28,12)"))
+          .cast("double"))
+        .collect()(0).getDouble(0) < tol)) else None
+    // Checkpoint EVERY round (the Pregel execution shape). Eagerness is
+    // not just the r9 2^iters fix for the dangling double-reference —
+    // profiled at sf0.1, lazily-batched rounds cost 4.2 s/round vs
+    // 1.2 s eager: inside a deep lazy chain Catalyst has no size stats
+    // for the rank subtree, so the norm⋈pr join falls back to
+    // sort-merge over the full edge table each round, while an eager
+    // cut gives the next round a stats-bearing LogicalRDD (and the
+    // broadcast hint above a materialized build side). The final round
+    // stays lazy: the caller's own action materializes it.
+    Fixpoint.run(verts.withColumn("pr", lit(1.0 / n)), iters,
+        checkpointInit = false, eagerFinal = false, check) { (pr, _) =>
       val prSide = if (bcastRanks) broadcast(pr) else pr
       val contribs = norm.join(prSide, norm("src") === prSide("v"))
         .select(col("dst").as("v"), (col("pr") * col("p")).as("contrib"))
@@ -134,7 +145,7 @@ object GraphOps extends QueryModule {
               coalesce(col("contrib_sum"), lit(0.0))).as("pr"))
         else {
           // dangling mass as a broadcast 1-row table: D = Σ pr(dangling).
-          // Second reference to pr — rc.step below caps the plan at one
+          // Second reference to pr — the round cut caps the plan at one
           // round deep so the double reference cannot compound.
           val dmass = dangling.join(pr, Seq("v"))
             .agg(coalesce(sum(col("pr").cast("decimal(28,12)")).cast("double"),
@@ -145,30 +156,8 @@ object GraphOps extends QueryModule {
                 (coalesce(col("contrib_sum"), lit(0.0)) +
                   col("dm") / lit(n.toDouble))).as("pr"))
         }
-      // Checkpoint EVERY round (the Pregel execution shape). Eagerness is
-      // not just the r9 2^iters fix for the dangling double-reference —
-      // profiled at sf0.1, lazily-batched rounds cost 4.2 s/round vs
-      // 1.2 s eager: inside a deep lazy chain Catalyst has no size stats
-      // for the rank subtree, so the norm⋈pr join falls back to
-      // sort-merge over the full edge table each round, while an eager
-      // cut gives the next round a stats-bearing LogicalRDD (and the
-      // broadcast hint above a materialized build side). rc.step also
-      // releases round i−1's blocks, so storage stays O(n) not O(iters·n).
-      // The final round stays lazy: the caller's own action materializes
-      // it; an eager step here would pay that job twice.
-      pr = if (i == iters) next else rc.step(next)
-      if (tol > 0 && i % checkEvery == 0 && i < iters) {
-        val delta = pr
-          .join(prev.withColumnRenamed("pr", "pr_prev"), "v")
-          .agg(sum(abs(col("pr") - col("pr_prev")).cast("decimal(28,12)"))
-            .cast("double"))
-          .collect()(0).getDouble(0)
-        if (delta < tol) converged = true
-        rc.retain(pr) // delta baseline must outlive the next checkEvery rounds
-        prev = pr
-      }
+      Some(next)
     }
-    (pr, i)
   }
 
   /** Integer-QUANTIZED PageRank: rank carried as a BIGINT at scale 10¹²,
@@ -184,7 +173,7 @@ object GraphOps extends QueryModule {
     * per edge per round — bounded by in-degree·iters ≪ the 10⁶ output
     * quantum of `pr_ppm`. Execution recipe is [[pagerankRounds]]'s:
     * rank vector broadcast under the cap, one exchange per round, eager
-    * round cuts via [[RoundCheckpointer]].
+    * round cuts via [[Fixpoint]].
     *
     * Returns (v BIGINT, pr BIGINT at scale 1e12). No dangling support:
     * callers pass bidirected graphs (graph1's purchase graph), where
@@ -213,23 +202,18 @@ object GraphOps extends QueryModule {
     if (n == 0) return verts.withColumn("pr", lit(0L))
     val base = 150000000000L / n // floor(0.15·Scale / n)
     val bcastRanks = n <= broadcastCap
-    val rc = new RoundCheckpointer
-    var pr = verts.withColumn("pr", lit(Scale / n))
-    var i = 0
-    while (i < iters) {
-      i += 1
+    Fixpoint.run(verts.withColumn("pr", lit(Scale / n)), iters,
+        checkpointInit = false, eagerFinal = false, None) { (pr, _) =>
       val prSide = if (bcastRanks) broadcast(pr) else pr
       val contribs = en.join(prSide, en("src") === prSide("v"))
         .select(col("dst").as("v"),
           expr("(pr * w) DIV outw").as("contrib"))
         .groupBy("v").agg(sum("contrib").as("c"))
       val cSide = if (bcastRanks) broadcast(contribs) else contribs
-      val next = verts.join(cSide, Seq("v"), "left")
+      Some(verts.join(cSide, Seq("v"), "left")
         .select(col("v"),
-          (lit(base) + expr("(17 * coalesce(c, 0L)) DIV 20")).as("pr"))
-      pr = if (i == iters) next else rc.step(next)
-    }
-    pr
+          (lit(base) + expr("(17 * coalesce(c, 0L)) DIV 20")).as("pr")))
+    }._1
   }
 
   /** Hop-bounded single-source shortest paths (Bellman-Ford relaxation):
@@ -242,7 +226,7 @@ object GraphOps extends QueryModule {
     * against edges partitioned by src) + ONE min-aggregate, the dist
     * vector broadcast while it is ≤ [[PagerankBroadcastVertexCap]] rows so
     * the edge table never shuffles; rounds cut eagerly via
-    * [[RoundCheckpointer]] (plan depth and block footprint O(1) in K).
+    * [[Fixpoint]] (plan depth and block footprint O(1) in K).
     * MIN is order-independent — no decimal protocol needed: with integer
     * weights the result is exact, bit-identical to any engine's answer on
     * the same path set. Unreachable-within-K vertices are absent (no ∞
@@ -256,20 +240,16 @@ object GraphOps extends QueryModule {
     val bcast =
       e.select(col("dst").as("v")).distinct().count() <=
         PagerankBroadcastVertexCap
-    val rc = new RoundCheckpointer
-    var dist = e.sparkSession.range(1)
+    val init = e.sparkSession.range(1)
       .select(lit(source).as("v"), lit(0L).as("dist"))
-    var i = 0
-    while (i < maxHops) {
-      i += 1
+    Fixpoint.run(init, maxHops, checkpointInit = false, eagerFinal = false,
+        None) { (dist, _) =>
       val dSide = if (bcast) broadcast(dist) else dist
       val relaxed = e.join(dSide, e("src") === dSide("v"))
         .select(col("dst").as("v"), (col("dist") + col("w")).as("dist"))
-      val next = dist.unionByName(relaxed)
-        .groupBy("v").agg(min("dist").as("dist"))
-      dist = if (i == maxHops) next else rc.step(next)
-    }
-    dist
+      Some(dist.unionByName(relaxed)
+        .groupBy("v").agg(min("dist").as("dist")))
+    }._1
   }
 
   /** Purchase graph shared by the graph queries: bidirected customer ↔
@@ -317,28 +297,21 @@ object GraphOps extends QueryModule {
     * parts that ever appear in the same order. Unlike [[purchaseEdges]]
     * (bipartite — triangle-free by construction) this projection has real
     * triangle structure, so it carries the triangle/clustering queries.
-    * Same derived-dataset memoization rationale as purchaseEdges; the
-    * per-order self-join fan-out is bounded by basket size² (the agg20
-    * pattern) and the edge set is ONE distinct shuffle on (x, y). */
-  private def partCoPurchaseEdges(s: SparkSession, d: String): DataFrame =
+    * Same derived-dataset memoization rationale as purchaseEdges. The
+    * pairs come from [[PairExpansion]] over each order's distinct part set
+    * (one exchange, local x<y expansion; fan-out bounded by basket size²),
+    * and the pair count is dropped, which leaves one global distinct. */
+  private[graft] def partCoPurchaseEdges(s: SparkSession, d: String)
+  : DataFrame =
     graft.StageMemo.frame(s, s"graph.part_edges.$d") {
-      // r22 (guide §2.4; the llm2b/agg20 posting-list pattern): ONE
-      // exchange groups each order's distinct part set (collect_set
-      // dedups in the aggregate) and the x<y pairs expand LOCALLY —
-      // replacing the former (order, part) distinct + basket self-join,
-      // which shuffled the same rows twice and whose hash-relation build
-      // was the memo's GC hot spot (BENCH_NOTES r20: the basket² edge
-      // self-join's allocations drove graph4's sf1 spread). Same edge
-      // set: per order, all x<y combinations of its distinct parts, then
-      // one global distinct.
-      Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey").cast("long")).as("ps"))
-        .select(explode(col("ps")).as("x"), col("ps"))
-        .select(col("x"), explode(col("ps")).as("y"))
-        .filter(col("x") < col("y"))
-        .select("x", "y")
-        .distinct()
+      // r22 (guide §2.4): replaces the former (order, part) distinct +
+      // basket self-join, whose hash-relation build was the memo's GC hot
+      // spot (BENCH_NOTES r20: the basket² edge self-join's allocations
+      // drove graph4's sf1 spread)
+      PairExpansion.counts(Tables.lineitem(s, d), col("l_orderkey"),
+          col("l_partkey").cast("long"), asSet = true, directed = false,
+          dfCap = None)
+        .select(col("a").as("x"), col("b").as("y"))
     }
 
   /** Per-vertex degree of an undirected (x < y) edge list. */
@@ -455,14 +428,13 @@ object GraphOps extends QueryModule {
     * hash-matches). Per round: ONE degree aggregate over the surviving
     * edges + two anti-joins against the dropped-vertex set (broadcast —
     * the drop set is ≤ vertices, dimension-sized under the pagerank cap),
-    * rounds cut eagerly via [[RoundCheckpointer]]. The peel is monotone
+    * rounds cut eagerly via [[Fixpoint]]. The peel is monotone
     * (edges only shrink), so per-round cost falls as the core tightens;
     * at 100 TB each round is a map-side-combined agg + broadcast anti-join
     * over an edge table partitioned by x — no vertex ever sees more than
     * its own adjacency. */
   def kcore(edges0: DataFrame, k: Int, maxRounds: Int = 6,
             broadcastCap: Long = PagerankBroadcastVertexCap): DataFrame = {
-    val rc = new RoundCheckpointer
     // one-time broadcast gate: the per-round drop set is ≤ the vertex count
     val small = degrees(edges0).count() <= broadcastCap
     // r22: the r20 shrinking-checkpoint loop, restored. The r21 "fast
@@ -474,25 +446,18 @@ object GraphOps extends QueryModule {
     // shrinking working set is the right §5 posture — per-round cost
     // falls as the core tightens.
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    var edges = edges0
-    var i = 0
-    var converged = false
-    while (i < maxRounds && !converged) {
-      i += 1
+    Fixpoint.run(edges0, maxRounds, checkpointInit = false, eagerFinal = true,
+        None) { (edges, round) =>
       // materialize the (small) drop set once per round — the degree agg
       // would otherwise recompute for the isEmpty probe AND each anti-join
-      val drop = degrees(edges).filter(col("deg") < k).select("v")
-        .localCheckpoint()
-      if (drop.isEmpty) converged = true
-      else {
-        val next = edges
-          .join(bc(drop.withColumnRenamed("v", "x")), Seq("x"), "left_anti")
-          .join(bc(drop.withColumnRenamed("v", "y")), Seq("y"), "left_anti")
-          .select("x", "y")
-        edges = rc.step(next)
-      }
-    }
-    edges
+      val drop = round.checkpoint(
+        degrees(edges).filter(col("deg") < k).select("v"))
+      if (drop.isEmpty) None
+      else Some(edges
+        .join(bc(drop.withColumnRenamed("v", "x")), Seq("x"), "left_anti")
+        .join(bc(drop.withColumnRenamed("v", "y")), Seq("y"), "left_anti")
+        .select("x", "y"))
+    }._1
   }
 
   /** GRAPH-5 — synchronous label propagation (Raghavan et al. 2007) over
@@ -505,33 +470,31 @@ object GraphOps extends QueryModule {
     * synchronous fixed-round form is the price of an exact oracle).
     * Per round: ONE join of the neighbor list against the label table
     * (broadcast under the pagerank vertex cap, shuffle-join above it) and
-    * two stacked hash aggs; rounds are [[RoundCheckpointer]]-bounded so
+    * two stacked hash aggs; rounds are [[Fixpoint]]-bounded so
     * plan depth stays O(1). The neighbor list materializes once. */
   def labelPropagation(edges: DataFrame, rounds: Int,
                        broadcastCap: Long = PagerankBroadcastVertexCap,
                        prebuiltAdj: Option[DataFrame] = None)
   : DataFrame = {
-    val rc = new RoundCheckpointer
     // prebuiltAdj: an already-materialized (v, u) both-direction neighbor
     // list (the partAdj memo) — skips rebuilding the per-call checkpoint
     val nb = prebuiltAdj.getOrElse(
       edges.select(col("x").as("v"), col("y").as("u"))
         .unionByName(edges.select(col("y").as("v"), col("x").as("u")))
         .localCheckpoint()) // scanned every round
-    var labels = nb.select(col("v")).distinct().withColumn("lbl", col("v"))
-    val small = labels.count() <= broadcastCap
+    val init = nb.select(col("v")).distinct().withColumn("lbl", col("v"))
+    val small = init.count() <= broadcastCap
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    for (_ <- 1 to rounds) {
-      val next = nb
+    Fixpoint.run(init, rounds, checkpointInit = false, eagerFinal = true,
+        None) { (labels, _) =>
+      Some(nb
         .join(bc(labels.withColumnRenamed("v", "u")
           .withColumnRenamed("lbl", "ulbl")), Seq("u"))
         .groupBy("v", "ulbl").agg(count(lit(1)).as("c"))
         .groupBy("v")
         .agg(max(struct(col("c"), (-col("ulbl")).as("nl"))).as("m"))
-        .select(col("v"), (-col("m.nl")).as("lbl"))
-      labels = rc.step(next)
-    }
-    labels
+        .select(col("v"), (-col("m.nl")).as("lbl")))
+    }._1
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

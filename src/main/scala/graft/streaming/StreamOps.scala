@@ -1184,19 +1184,21 @@ object StreamOps extends QueryModule {
     // the oracle (plain per-user COUNT(*)); the txn tag makes it a no-op.
     "strm15_idempotent_ingest" -> ((s, d) => {
       import graft.operators.VersionedStore
-      val tmp = graft.TmpStores.scratch("strm15")
       // r22: the 4-file SOURCE fixture is setup, not the ingest under
       // test — written once per (session, sf-dir) like every other
-      // fixture memo (cost in the memo ledger). The store + checkpoint
-      // stay per-call scratch dirs: each run's stream must ingest all 4
-      // batches into a FRESH store for the replay-idempotence proof.
+      // fixture memo (cost in the memo ledger), into its own scratch dir
+      // allocated at first build (the join14 discipline). The store +
+      // checkpoint stay per-call scratch dirs: each run's stream must
+      // ingest all 4 batches into a FRESH store for the replay-idempotence
+      // proof.
       val src = graft.StageMemo.value(s, s"strm15.src.$d") {
-        val p = s"$tmp/src"
+        val p = graft.TmpStores.scratch("strm15_src")
         Tables.events(s, d).select("user_id", "event_id")
           .repartition(4).write.parquet(p)
         p
       }
       val schema = s.read.parquet(src).schema
+      val tmp = graft.TmpStores.scratch("strm15")
       runIdempotentIngest(
         s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
           .parquet(src),

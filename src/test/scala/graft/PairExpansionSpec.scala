@@ -2,13 +2,17 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** r22 posting-list pair-expansion rewrites (the verified llm2b pattern
-  * applied to the basket-pair family): agg20's collect_set + local a<b
-  * expansion must emit EXACTLY the pair multiset of the former
-  * distinct + self-join plan, and the graph family's co-purchase edge
-  * memo (same rewrite) the same edge set — pinned here against the naive
-  * form so later churn can't silently change what the queries compute. */
+import graft.operators.{Analytics, GraphOps, PairExpansion}
+
+/** Posting-list pair expansion ([[PairExpansion]]) against the naive
+  * distinct + self-join forms it replaced, through the production callers:
+  * agg20's declared query, the graph family's co-purchase edge memo, and
+  * the df-capped directed expansion the n-gram dedup family runs — pinned
+  * so later churn can't silently change what the queries compute. */
 class PairExpansionSpec extends SparkSpec {
+
+  private def triples(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
   test("agg20: collect_set pair expansion == naive distinct self-join") {
     val naive = {
@@ -19,19 +23,19 @@ class PairExpansionSpec extends SparkSpec {
       a.join(b, Seq("l_orderkey"))
         .filter(col("part_a") < col("part_b"))
         .groupBy("part_a", "part_b").agg(count(lit(1)).as("n_orders"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
-    // the declared query top-20 is a subset; compare the FULL pair table
-    // by re-deriving it the declared query's way
-    val rewritten = Tables.lineitem(spark, Sf0001)
-      .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-      .select(explode(col("ps")).as("part_a"), col("ps"))
-      .select(col("part_a"), explode(col("ps")).as("part_b"))
-      .filter(col("part_a") < col("part_b"))
-      .groupBy("part_a", "part_b").agg(count(lit(1)).as("n_orders"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(naive.nonEmpty, "fixture must produce co-purchase pairs")
-    assert(rewritten === naive)
+    // the FULL pair table, with agg20's arguments
+    val full = PairExpansion.counts(Tables.lineitem(spark, Sf0001),
+      col("l_orderkey"), col("l_partkey"), asSet = true, directed = false,
+      dfCap = None)
+    assert(triples(naive).nonEmpty, "fixture must produce co-purchase pairs")
+    assert(triples(full).toSet === triples(naive).toSet)
+    // and the declared query itself: its top-20 is the naive top-20
+    val top = triples(naive.orderBy(col("n_orders").desc, col("part_a"),
+      col("part_b")).limit(20))
+    val declared = triples(Analytics.queries("agg20_copurchase_pairs")(
+      spark, Sf0001))
+    assert(declared.toSeq === top.toSeq)
   }
 
   test("graph edge memo: collect_set expansion == naive basket self-join") {
@@ -43,15 +47,45 @@ class PairExpansionSpec extends SparkSpec {
       .select(col("a.p").as("x"), col("b.p").as("y"))
       .distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rewritten = Tables.lineitem(spark, Sf0001)
-      .groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey").cast("long")).as("ps"))
-      .select(explode(col("ps")).as("x"), col("ps"))
-      .select(col("x"), explode(col("ps")).as("y"))
-      .filter(col("x") < col("y"))
-      .select("x", "y").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val edges = GraphOps.partCoPurchaseEdges(spark, Sf0001)
+    assert(edges.columns.toSeq === Seq("x", "y"))
+    val got = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(naive.nonEmpty, "fixture must produce co-purchase edges")
-    assert(rewritten === naive)
+    assert(got.length === got.toSet.size, "edges must be distinct")
+    assert(got.toSet === naive)
+  }
+
+  test("posting lists: df-capped directed pairs == naive capped self-join") {
+    val s = spark
+    import s.implicits._
+    // shingle "hot" is carried by 4 docs — above the cap of 3; docs 1 and 4
+    // share nothing else, so their pair must vanish under the cap
+    val rows = Seq(
+      (1L, "hot"), (2L, "hot"), (3L, "hot"), (4L, "hot"),
+      (1L, "ab"), (2L, "ab"),
+      (1L, "abc"), (2L, "abc"), (3L, "abc"),
+      (3L, "cd"), (4L, "cd"),
+      (5L, "solo"))
+      .toDF("doc_id", "shingle")
+    val cap = 3
+    val naive = {
+      val df = rows.groupBy("shingle").agg(count(lit(1)).as("df"))
+      val kept = rows.join(df.filter(col("df") <= cap), "shingle")
+      kept.select(col("shingle"), col("doc_id").as("a"))
+        .join(kept.select(col("shingle"), col("doc_id").as("b")), "shingle")
+        .filter(col("a") =!= col("b"))
+        .groupBy("a", "b").agg(count(lit(1)).as("n"))
+    }
+    val got = triples(PairExpansion.counts(rows, col("shingle"),
+      col("doc_id"), asSet = false, directed = true, dfCap = Some(cap)))
+    assert(got.toSet === triples(naive).toSet)
+    assert(got.toSet.contains((1L, 2L, 2L)) && got.toSet.contains((2L, 1L, 2L)),
+      "directed: both orders, counting the two under-cap shingles")
+    assert(!got.exists(t => t._1 == 1L && t._2 == 4L),
+      "a pair resting only on the over-cap shingle must be pruned")
+    // uncapped, the hot shingle contributes: (1, 4) appears
+    val uncapped = triples(PairExpansion.counts(rows, col("shingle"),
+      col("doc_id"), asSet = false, directed = true, dfCap = Some(4)))
+    assert(uncapped.toSet.contains((1L, 4L, 1L)))
   }
 }
